@@ -7,8 +7,13 @@
 #   scripts/bench.sh graft.ScalingBench          # N vs 4N evidence → BENCH/BASELINE.md
 #   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=16 \
 #     scripts/bench.sh graft.Bench               # headline JSON line
-#   SPARK_GRAFT_CPUS=16 scripts/bench.sh graft.ProfileRound   # per-phase split
 #   scripts/bench.sh graft.Plans                 # regenerate PLANS.md
+#
+# The crawl's per-layer split (driver gap, per-stage times, frontier/seen/
+# store layers, extraction and URL costs) comes from the traced benchmark,
+# which builds and runs its own JVM:
+#
+#   python3 perfbench/run.py --workload round_bulk --seed 1 --seconds 15 --trace 1
 #
 # Flags mirror build.sbt's forked-JVM options (JDK17 add-opens, ParallelGC,
 # 24g heap — override with HEAP=..., extra JVM flags with EXTRA_JVM=...).

@@ -703,28 +703,20 @@ object SparkEntry {
         maxTokens = 200, jaccardThreshold = 0.9)
       // the corpus chain (dedupBase -> band index) and the delta batch
       // are independent constructions off the same checkpointed d — run
-      // them as concurrent jobs (guide-style overlap; the former serial
-      // shape paid three sequential checkpoint barriers)
+      // them as one wave (guide-style overlap; the former serial shape
+      // paid three sequential checkpoint barriers)
       val exactCopies = d.select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
       val nearCopies = d.select((col("doc_id") + 20000000L).as("doc_id"),
         concat(col("text"), lit(" "), col("text")).as("text"))
       val fresh = forestDf(s, ids, 30000000L, "-f-")
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fCorpus = Future {
+      val ((corpusExact, index), delta) = Waves.all("curate-delta-fixture")({
         val corpusExact = Curation.dedupBase(d, "doc_id", "text", cfgC)
           .localCheckpoint(true)
         val index = Dedup.lshBandIndex(corpusExact, "text", "doc_id",
           cfgC.minhashHashes, cfgC.minhashBands, cfgC.shingleSize)
           .localCheckpoint(true)
         (corpusExact, index)
-      }
-      val fDelta = Future {
-        exactCopies.union(nearCopies).union(fresh).localCheckpoint(true)
-      }
-      val (corpusExact, index) = Await.result(fCorpus, Duration.Inf)
-      val delta = Await.result(fDelta, Duration.Inf)
+      }, exactCopies.union(nearCopies).union(fresh).localCheckpoint(true))
       // deltaDocsBound: the delta is three copies of the ≤ 4000-id fixture
       // (≤ 12000 rows at any SF) — the bound removes the fold's per-call
       // delta count job; gate-only, survivors identical on either route

@@ -1,6 +1,6 @@
 package graft.frontier
 
-import graft.ObservedMetrics
+import graft.{ObservedMetrics, Waves}
 import graft.model.FrontierEntry
 import graft.store.FrontierStore
 import graft.url.Urls
@@ -97,16 +97,12 @@ object FrontierCrawl {
     // no per-round rebuild of the R-way union either: re-deriving
     // `deltas.reduce(union)` each round re-analyzed R-1 fresh Dataset
     // constructions per round, a measured O(R) driver cost per round that
-    // ProfileDrain showed growing 18→67ms by round 6; the incremental
+    // a drain profile showed growing 18→67ms by round 6; the incremental
     // union analyzes only the new top node, its children already marked
     // analyzed)
     // running url_key count of `seen` (may overcount retries; used only to
     // size the bloom filter, where an upper bound is safe)
     var seenCount: Long = if (seen.isDefined) -1L else 0L
-
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
 
     // per-round accumulator parts: only the crawl RESULT reads these.
     // Store-path parts are plain reads of committed tables; storeless
@@ -152,56 +148,84 @@ object FrontierCrawl {
       val out = FrontierRound.run(spark, pages, frontier, seen, round,
         robotsCur, cfg, seenCount, seenBloom, frontierSizeBound = frontierRows,
         bloomRidesCheckpoint = store.isEmpty)
+      // the round's bookkeeping once it is materialized, run in the same
+      // wave as the next round's bloom (see below)
+      def afterRound(): Unit = {
+        // running seen count (sizes next round's bloom): the schedule count
+        // is free here — the commit/checkpoint materialized the round, so
+        // the observation-backed thunk returns without launching a job
+        if (seenCount >= 0L) seenCount += out.scheduledCount()
+        // the next frontier was materialized (localCheckpoint or snapshot
+        // write); its observed row count arrives on the listener bus
+        // momentarily (latching bounded wait via the shared helper)
+        frontierRows =
+          ObservedMetrics.longField(out.frontierObservation, "rows") { -1L }
+        // adaptive politeness backoff (opt-in): overrides from THIS round's
+        // statuses (the results projection reads the already-materialized
+        // checkpoint/commit — one cheap job), merged into the ORIGINAL
+        // robots so a recovering host regains its budget. Override rows are
+        // failing-host-bounded by construction (clean hosts emit nothing)
+        // skipped when the loop is about to exit (drained frontier or final
+        // round) — the overrides would be computed and thrown away
+        if (cfg.adaptiveBackoff && frontierRows != 0L && round + 1 < maxRounds) {
+          val ov = AdaptiveBudgets.fromResults(resultParts.last,
+              base = cfg.defaultBudget)
+            .collect()
+            .map(r => r.getAs[String]("host") -> r.getAs[Int]("budget")).toMap
+          robotsCur = AdaptiveBudgets.mergeInto(robots, ov)
+        }
+      }
       // next round's cumulative bloom. Store path: delta build + merge runs
-      // CONCURRENT with the commit wave (see RoundOutput.seenBloomAfter for
+      // in one wave with the commit (see RoundOutput.seenBloomAfter for
       // why the in-flight merge is probe-safe; the thunk waits for the big
       // job's observation before touching the schedule cache). Storeless
-      // path: created AFTER checkpointRound() — the delta then reads the
-      // checkpoint-riding accumulator, no build job at all. The match
-      // RETURNS the future so the compiler enforces every branch makes one.
-      val fBloom: Future[Option[org.apache.spark.util.sketch.BloomFilter]] =
-      store match {
+      // path: built AFTER checkpointRound() — the delta then reads the
+      // checkpoint-riding accumulator, no build job at all. Either wave
+      // settles before the caches feeding the bloom are released below
+      // (the delta build reads the round's `scheduled` cache).
+      seenBloom = store match {
         case Some(st) =>
-          val f = Future(out.seenBloomAfter())
-          // atomic multi-table snapshot; reading back truncates lineage.
-          // seen is committed as this round's DELTA; the manifest carries
-          // the full part list (no distinct/rewrite of the cumulative set —
-          // retries may duplicate keys, harmless for anti-join/bloom)
-          // seen-part compaction: when the prior delta list has grown past
-          // the threshold, fold those on-disk parts into one table written
-          // as part of THIS round's commit (concurrent with the round's own
-          // tables, same atomic manifest publish — a crash before publish
-          // leaves only an ignored orphan). The current round's delta stays
-          // its own part, so the compacted read never re-derives newSeenKeys
-          val compactNow = cfg.compactSeenParts > 0 &&
-            seenParts.length >= cfg.compactSeenParts
-          val baseTables = Map(
-            "frontier" -> out.newFrontier.toDF(),
-            "seen_delta" -> out.newSeenKeys,
-            "extracted" -> out.extracted.toDF(),
-            "results" -> out.results,
-            "scheduled" -> out.scheduled.withColumn("round", lit(round)),
-            "metrics" -> out.metrics.toDF())
-          val tables =
-            if (compactNow)
-              baseTables + ("seen_compacted" -> spark.read.parquet(seenParts: _*))
-            else baseTables
-          val newParts =
-            (if (compactNow) Vector(st.tablePath(round, "seen_compacted"))
-             else seenParts) :+ st.tablePath(round, "seen_delta")
-          val snap = st.commit(round, tables,
-            aliases = Map("seen_parts" -> newParts.mkString(";")))
-          // the folded parts are unreferenced by the just-published
-          // manifest (resume reads the newest), so reclaim their disk now
-          if (compactNow) st.gc(seenParts)
-          seenParts = newParts
-          frontier = st.read(snap, "frontier").as[FrontierEntry]
-          seen = Some(spark.read.parquet(seenParts: _*))
-          schedParts :+= st.read(snap, "scheduled")
-          extractedParts :+= st.read(snap, "extracted")
-          resultParts :+= st.read(snap, "results")
-          metricParts :+= st.read(snap, "metrics")
-          f
+          Waves.all("crawl-commit")(out.seenBloomAfter(), {
+            // atomic multi-table snapshot; reading back truncates lineage.
+            // seen is committed as this round's DELTA; the manifest carries
+            // the full part list (no distinct/rewrite of the cumulative set —
+            // retries may duplicate keys, harmless for anti-join/bloom)
+            // seen-part compaction: when the prior delta list has grown past
+            // the threshold, fold those on-disk parts into one table written
+            // as part of THIS round's commit (concurrent with the round's own
+            // tables, same atomic manifest publish — a crash before publish
+            // leaves only an ignored orphan). The current round's delta stays
+            // its own part, so the compacted read never re-derives newSeenKeys
+            val compactNow = cfg.compactSeenParts > 0 &&
+              seenParts.length >= cfg.compactSeenParts
+            val baseTables = Map(
+              "frontier" -> out.newFrontier.toDF(),
+              "seen_delta" -> out.newSeenKeys,
+              "extracted" -> out.extracted.toDF(),
+              "results" -> out.results,
+              "scheduled" -> out.scheduled.withColumn("round", lit(round)),
+              "metrics" -> out.metrics.toDF())
+            val tables =
+              if (compactNow)
+                baseTables + ("seen_compacted" -> spark.read.parquet(seenParts: _*))
+              else baseTables
+            val newParts =
+              (if (compactNow) Vector(st.tablePath(round, "seen_compacted"))
+               else seenParts) :+ st.tablePath(round, "seen_delta")
+            val snap = st.commit(round, tables,
+              aliases = Map("seen_parts" -> newParts.mkString(";")))
+            // the folded parts are unreferenced by the just-published
+            // manifest (resume reads the newest), so reclaim their disk now
+            if (compactNow) st.gc(seenParts)
+            seenParts = newParts
+            frontier = st.read(snap, "frontier").as[FrontierEntry]
+            seen = Some(spark.read.parquet(seenParts: _*))
+            schedParts :+= st.read(snap, "scheduled")
+            extractedParts :+= st.read(snap, "extracted")
+            resultParts :+= st.read(snap, "results")
+            metricParts :+= st.read(snap, "metrics")
+            afterRound()
+          })._1
         case None =>
           // the frontier checkpoint is the round's big job: it populates
           // the fused pages-pass cache (classify+extract+outlinks). The
@@ -211,20 +235,16 @@ object FrontierCrawl {
           // projections (they read checkpoint blocks, so they survive the
           // cache release below). Extraction itself already ran inside the
           // round's single fused pages pass. The two materializations are
-          // submitted CONCURRENTLY: they share the cached fused pass, and
-          // the block manager's per-partition locks make whichever task
+          // one wave: they share the cached fused pass, and the block
+          // manager's per-partition locks make whichever task
           // arrives first compute a partition while the other waits then
           // reads — same total work, but the checkpoint wave's job latency
           // overlaps the big job instead of following it (order between
           // the two actions is semantics-free: both are materializations
           // of deterministic plans over the same caches).
-          val fCk = Future(out.checkpointRound())
-          frontier = out.newFrontier.localCheckpoint(true).as[FrontierEntry]
-          val ck = Await.result(fCk, Duration.Inf)
-          // AFTER the checkpoint: the delta bloom now reads the narrow
-          // checkpoint's accumulator (when the partitions×bytes gate let it
-          // ride) — merge cost only, the per-round build job is gone
-          val f = Future(out.seenBloomAfter())
+          val (ck, next) = Waves.all("crawl-checkpoint")(
+            out.checkpointRound(), out.newFrontier.localCheckpoint(true))
+          frontier = next.as[FrontierEntry]
           seen = Some(seen match {
             case Some(s) => s.union(ck.seenDelta)
             case None => ck.seenDelta
@@ -233,34 +253,11 @@ object FrontierCrawl {
           resultParts :+= ck.results
           extractedParts :+= ck.extracted
           metricParts :+= ck.metrics
-          f
+          // AFTER the checkpoint: the delta bloom now reads the narrow
+          // checkpoint's accumulator (when the partitions×bytes gate let it
+          // ride) — merge cost only, the per-round build job is gone
+          Waves.all("crawl-bloom")(out.seenBloomAfter(), afterRound())._1
       }
-      // running seen count (sizes next round's bloom): the schedule count
-      // is free here — the commit/checkpoint above materialized the round,
-      // so the observation-backed thunk returns without launching a job
-      if (seenCount >= 0L) seenCount += out.scheduledCount()
-      // the next frontier was materialized above (localCheckpoint or
-      // snapshot write); its observed row count arrives on the listener bus
-      // momentarily (latching bounded wait via the shared helper)
-      frontierRows =
-        ObservedMetrics.longField(out.frontierObservation, "rows") { -1L }
-      // adaptive politeness backoff (opt-in): overrides from THIS round's
-      // statuses (the results projection reads the already-materialized
-      // checkpoint/commit — one cheap job), merged into the ORIGINAL
-      // robots so a recovering host regains its budget. Override rows are
-      // failing-host-bounded by construction (clean hosts emit nothing)
-      // skipped when the loop is about to exit (drained frontier or final
-      // round) — the overrides would be computed and thrown away
-      if (cfg.adaptiveBackoff && frontierRows != 0L && round + 1 < maxRounds) {
-        val ov = AdaptiveBudgets.fromResults(resultParts.last,
-            base = cfg.defaultBudget)
-          .collect()
-          .map(r => r.getAs[String]("host") -> r.getAs[Int]("budget")).toMap
-        robotsCur = AdaptiveBudgets.mergeInto(robots, ov)
-      }
-      // bloom merge must land before the caches feeding it are released
-      // (the delta build reads the round's `scheduled` cache)
-      seenBloom = Await.result(fBloom, Duration.Inf)
       out.caches.foreach(_.unpersist(false))
       round += 1
     }

@@ -43,7 +43,7 @@ object FrontierRound {
   /** results/extracted/metrics are BY-NAME + lazy: they are projections
     * nothing in the storeless loop reads (it uses the checkpointed round's
     * frames instead), and constructing a Dataset is never free — each one
-    * is an analyzer pass, which ProfileDrain measured as part of the
+    * is an analyzer pass, which a drain profile measured as part of the
     * ~300ms/round driver-only plan-build cost between rounds. Store-path
     * and bench callers touch them and pay the same one-time analysis as
     * before.
@@ -566,9 +566,6 @@ object FrontierRound {
       //  - wide = the superset, for results/extracted/metrics (which have
       //    always been post-join frames). Its materialization also fires
       //    the free-rider observation.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       // the narrow checkpoint reads every scheduled row once — when the
       // round wants a delta bloom, build it HERE as an accumulator side
       // channel (idempotent bit-sets, see BloomAccumulator) instead of a
@@ -598,9 +595,8 @@ object FrontierRound {
           scheduled.filter(addKey($"url_key"))
         case None => scheduled
       }
-      val fNarrow = Future(narrowSrc.localCheckpoint(true))
-      val ck = obsSuperset.localCheckpoint(true)
-      val narrow = Await.result(fNarrow, Duration.Inf)
+      val (narrow, ck) = graft.Waves.all("round-checkpoint")(
+        narrowSrc.localCheckpoint(true), obsSuperset.localCheckpoint(true))
       ckBloomAcc = acc
       CheckpointedRound(narrow.select($"url_key"), narrow,
         resultsOf(ck), extractedOf(ck).toDF(), metricsOf(ck).toDF())

@@ -269,25 +269,21 @@ object Curation {
       // pair-shaped job (edges, with the emptiness probe riding its
       // observation) instead of three (pairs checkpoint + isEmpty +
       // edges checkpoint); release() drops the shingle cache once the
-      // futures below have materialized everything that reads it
+      // wave below has materialized everything that reads it
       val (pairs, releaseSh) = Dedup.minhashLshPairsIncrementalLazy(
         corpusExact, corpusIndex, freshP, textCol, idCol, cfg.minhashHashes,
         cfg.minhashBands, cfg.jaccardThreshold, cfg.shingleSize,
         knownDeltaDocs = deltaDocsBound)
       // the two materializations are independent (survivors = freshP
       // anti-joined to cluster losers; baseAppend = freshP projected) —
-      // run them as concurrent jobs so the fold pays one checkpoint
-      // latency, not two (the fold is fixed-cost-bound: BENCH/BASELINE.md
-      // §D2 attributes its floor to sequential job launches)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fOut = Future(Dedup.keepClusterRepresentatives(freshP, pairs, idCol)
-        .select(outCols: _*)
-        .localCheckpoint(true))
-      val fBase = Future(freshP.select(outCols: _*).localCheckpoint(true))
-      val out = Await.result(fOut, Duration.Inf)
-      val baseAppend = Await.result(fBase, Duration.Inf)
+      // run them as one wave so the fold pays one checkpoint latency, not
+      // two (the fold is fixed-cost-bound: BENCH/BASELINE.md §D2
+      // attributes its floor to sequential job launches)
+      val (out, baseAppend) = graft.Waves.all("curate-delta")(
+        Dedup.keepClusterRepresentatives(freshP, pairs, idCol)
+          .select(outCols: _*)
+          .localCheckpoint(true),
+        freshP.select(outCols: _*).localCheckpoint(true))
       releaseSh()
       freshP.unpersist(false)
       (out, baseAppend)

@@ -59,6 +59,13 @@ object Search {
     * @param queries (queryIdCol, queryTextCol) — whitespace-tokenized bag
     *                of terms; for the reference's actual match_phrase
     *                (consecutive-term) gate use [[bm25PhraseTopK]]
+    *
+    * Eager and not recoverable: constructing the returned frame already
+    * runs a `localCheckpoint` wave ([[graft.Waves]]) over the corpus, so
+    * corpus-read failures surface here, not at the caller's action. The
+    * checkpointed statistics live only in executor storage, without
+    * lineage: after an executor is lost the returned frame cannot be
+    * recomputed, and the caller must call again.
     */
   def bm25TopK(
       docs: DataFrame,
@@ -90,6 +97,10 @@ object Search {
     * (html_converter.py:433-437 tiers min_score by the query's phrase
     * count). One hash aggregation over the scored candidates — no window,
     * no per-query scroll.
+    *
+    * Eager and not recoverable, as [[bm25TopK]]: construction already runs
+    * a `localCheckpoint` wave over the corpus, and after an executor is
+    * lost the returned frame cannot be recomputed from lineage.
     */
   def bm25QueryStats(
       docs: DataFrame,
@@ -161,29 +172,21 @@ object Search {
     // rejected window alternative).
     val boosts = fields.map(f => (f.name, f.boost)).toDF("field", "boost")
     def fieldsLong = fieldsLongOf(docs, fields, idCol, lower)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fTf = Future {
+    val (tfC, avgl, n) = graft.Waves.all("bm25-scored")(
       tokensWithDl(fieldsLong)
         .join(broadcast(qterms.select("term").distinct()), Seq("term"))
         .groupBy("field", "id", "term")
         .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-        .localCheckpoint(true)
-    }
-    val fAvgl = Future {
+        .localCheckpoint(true),
       fieldsLong
         .select(col("field"),
           size(filter(split(col("txt"), " "), t => length(t) > 0)).as("dl"))
         .filter(col("dl") > 0)
         .groupBy("field").agg(avg(col("dl")).as("avgdl"))
-        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-    }
-    val fN = Future { docs.count() }
-    val tfC = Await.result(fTf, Duration.Inf)
-    val avgl = Await.result(fAvgl, Duration.Inf).toDF("field", "avgdl")
-    val nDocs = Seq(Await.result(fN, Duration.Inf)).toDF("n")
-    scoreFromTf(withDf(tfC), qterms, avgl, boosts, nDocs, k1, b)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq,
+      docs.count())
+    scoreFromTf(withDf(tfC), qterms, avgl.toDF("field", "avgdl"), boosts,
+      Seq(n).toDF("n"), k1, b)
   }
 
   /** (id, field, dl, term) token stream from a (id, field, txt) long view:
@@ -288,6 +291,10 @@ object Search {
     * (row, field, phrase), no shuffle, emitting only matched clause keys.
     * The token stream is query-term-restricted before aggregation exactly
     * as in [[bm25Scored]]; only matched clauses reach the score joins.
+    *
+    * Eager and not recoverable, as [[bm25TopK]]: construction already runs
+    * a `localCheckpoint` wave over the corpus, and after an executor is
+    * lost the returned frame cannot be recomputed from lineage.
     */
   def bm25PhraseTopK(
       docs: DataFrame,
@@ -338,20 +345,12 @@ object Search {
     // checkpointed (candidate-sized), avgdl/count as local relations —
     // the corpus is gated and tokenized exactly once per call
     val (matched, tfd, avgl, nDocs) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fMatched = Future { matchedGate.localCheckpoint(true) }
-      val fTf = Future { tfAgg.localCheckpoint(true) }
-      val fAvgl = Future {
-        avglAgg.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-      }
-      val fN = Future { docs.count() }
-      val m = Await.result(fMatched, Duration.Inf)
-      val t = withDf(Await.result(fTf, Duration.Inf))
-      val a = Await.result(fAvgl, Duration.Inf).toDF("field", "avgdl")
-      val n = Seq(Await.result(fN, Duration.Inf)).toDF("n")
-      (m, t, a, n)
+      val (m, t, a, n) = graft.Waves.all("bm25-phrase")(
+        matchedGate.localCheckpoint(true),
+        tfAgg.localCheckpoint(true),
+        avglAgg.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq,
+        docs.count())
+      (m, withDf(t), a.toDF("field", "avgdl"), Seq(n).toDF("n"))
     }
 
     // matched clause × its phrase's term occurrences → scoreable rows;
@@ -425,15 +424,6 @@ object Search {
     // pays one wave of cluster time, not three sequential job latencies
     // (guide §2.6: overlap independent jobs); meta then derives from the
     // written dlen alone
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fTf = Future {
-      tok.groupBy("field", "id", "term")
-        .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-        .withColumn("tb", pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
-        .write.mode("overwrite").partitionBy("tb").parquet(s"$path/tf")
-    }
     val dlenCols =
       if (withText) Seq(col("field"), col("id"), col("dl"), col("txt"))
       else Seq(col("field"), col("id"), col("dl"))
@@ -447,20 +437,20 @@ object Search {
     // write job already streams past
     val obs = new org.apache.spark.sql.Observation()
     val obsCols = metaObsCols(fields)
-    val fDlen = Future {
-      val base = fieldsLong
+    val (_, _, nDocs) = graft.Waves.all("bm25-index")(
+      tok.groupBy("field", "id", "term")
+        .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
+        .withColumn("tb", pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
+        .write.mode("overwrite").partitionBy("tb").parquet(s"$path/tf"),
+      fieldsLong
         .withColumn("dl",
           size(filter(split(col("txt"), " "), t => length(t) > 0)))
         .filter(col("dl") > 0)
         .select(dlenCols: _*)
-      base.observe(obs, obsCols.head, obsCols.tail: _*)
-        .write.mode("overwrite").parquet(s"$path/dlen")
-    }
-    val fN = Future { docs.count() }
+        .observe(obs, obsCols.head, obsCols.tail: _*)
+        .write.mode("overwrite").parquet(s"$path/dlen"),
+      docs.count())
     val spark = docs.sparkSession
-    Await.result(fDlen, Duration.Inf)
-    val nDocs = Await.result(fN, Duration.Inf)
-    Await.result(fTf, Duration.Inf)
     writeMeta(spark, path,
       observedSums(spark, obs, fields).getOrElse(
         // unsupported-runtime fallback: the old re-read + re-aggregate
@@ -553,6 +543,12 @@ object Search {
     // and double-counted dlen on retry, with the loud failure arriving
     // only after the corruption was already on disk
     val oldMeta = spark.read.parquet(s"$path/meta")
+    // an index built over docs whose fields are all empty has no meta
+    // rows: its bucket count and layout bits are unknown, and every
+    // max() read below would be null
+    require(!oldMeta.isEmpty,
+      s"bm25IndexAppend: index meta at $path/meta is empty (no field had " +
+        "any token when the index was built); rebuild it with bm25Index")
     requireBuckets(oldMeta, termBuckets, "bm25IndexAppend")
     requireWithText(oldMeta, withText, "bm25IndexAppend")
     val fieldsLong = fieldsLongOf(newDocs, fields, idCol, canonText)
@@ -583,25 +579,16 @@ object Search {
     // delta's per-field sums RIDE the dlen append as an observation (the
     // former separate deltaSums aggregation re-evaluated the whole
     // fieldsLong pipeline — a second full delta pass per append)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fTf = Future {
-      tfOut
-        .withColumn("tb", pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
-        .write.mode("append").partitionBy("tb").parquet(s"$path/tf")
-    }
     val obs = new org.apache.spark.sql.Observation()
     val obsCols = metaObsCols(fields)
-    val fDlen = Future {
+    val (_, _, nNew) = graft.Waves.all("bm25-append")(
+      tfOut
+        .withColumn("tb", pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
+        .write.mode("append").partitionBy("tb").parquet(s"$path/tf"),
       deltaDlen.select(dlenCols: _*)
         .observe(obs, obsCols.head, obsCols.tail: _*)
-        .write.mode("append").parquet(s"$path/dlen")
-    }
-    val fN = Future { newDocs.count() }
-    Await.result(fDlen, Duration.Inf)
-    Await.result(fTf, Duration.Inf)
-    val nNew = Await.result(fN, Duration.Inf)
+        .write.mode("append").parquet(s"$path/dlen"),
+      newDocs.count())
     // meta: old sums + delta sums (both tiny) — never re-reads dlen
     val deltaSums = observedSums(spark, obs, fields)
       .getOrElse(deltaDlen.groupBy("field")

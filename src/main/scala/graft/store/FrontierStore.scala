@@ -52,27 +52,18 @@ final class FrontierStore(spark: SparkSession, root: String) {
   def commit(round: Int, tables: Map[String, DataFrame],
       aliases: Map[String, String] = Map.empty): Snapshot = {
     val dir = roundDir(round)
-    // table writes run as CONCURRENT Spark jobs (they are independent —
+    // table writes run as one concurrent wave (they are independent —
     // mostly cache reads of the round's fused pages pass), so a snapshot
-    // pays ~one job latency instead of |tables|; the manifest is only
-    // published after every write has finished, preserving atomicity
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.util.{Failure, Success, Try}
-    val writes = tables.toSeq.map { case (name, df) =>
-      val p = new Path(dir, name).toString
-      Future { df.write.mode(SaveMode.Overwrite).parquet(p); name -> p }
-    }
-    // gather EVERY future before returning or throwing: if one write fails
-    // while siblings are still in flight, an immediate re-commit of the same
-    // round must not race two Overwrite jobs on the same paths — so lift to
-    // Try (Future.sequence over Trys never short-circuits), await all, then
-    // surface the first failure
-    val settled = Await.result(
-      Future.sequence(writes.map(_.transform(t => Success(t)))), Duration.Inf)
-    settled.collectFirst { case Failure(e) => e }.foreach(e => throw e)
-    val paths = settled.collect { case Success(kv) => kv }.toMap ++ aliases
+    // pays ~one job latency instead of |tables|; the wave settles every
+    // write before it returns or rethrows, so the manifest is only
+    // published after every write has finished (atomicity) and a re-commit
+    // after a failure never races a still-running Overwrite
+    val paths = graft.Waves.seq("store-commit")(tables.toSeq.map {
+      case (name, df) => () =>
+        val p = new Path(dir, name).toString
+        df.write.mode(SaveMode.Overwrite).parquet(p)
+        name -> p
+    }).toMap ++ aliases
     val tmp = new Path(root, s"_tmp/manifest-$round.json")
     fs.mkdirs(tmp.getParent)
     fs.mkdirs(manifestDir)

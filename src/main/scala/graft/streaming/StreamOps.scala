@@ -203,15 +203,13 @@ object StreamOps {
     import org.apache.hadoop.fs.Path
     val gen = batchId - 1
     // the three sub-tables are independent directories with independent
-    // generation counters — fold them CONCURRENTLY (each fold is a
+    // generation counters — fold them as one wave (each fold is a
     // read+write+rename+sweep chain; run sequentially a compaction batch
-    // pays 3x that chain's job latency). Every fold settles before
-    // returning so a crash mid-compaction still leaves only
+    // pays 3x that chain's job latency). The wave settles every fold
+    // before returning so a crash mid-compaction still leaves only
     // ignored-by-readers temp/stale dirs per the newest-generation rule.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val folds = Seq("base", "index", "survivors").map { sub => Future {
+    val subs = Seq("base", "index", "survivors")
+    graft.Waves.seq("stream-compact")(subs.map { sub => () =>
       val root = s"$storeDir/$sub"
       val live = livePaths(fs, root, excludeBatchId = batchId)
       if (live.nonEmpty) {
@@ -234,11 +232,7 @@ object StreamOps {
           if (stale) fs.delete(st.getPath, true)
         }
       }
-    } }
-    val settled = Await.result(
-      Future.sequence(folds.map(_.transform(scala.util.Success(_)))),
-      Duration.Inf)
-    settled.foreach(_.get)
+    })
   }
 
   /** Fold one micro-batch into the curated store. Returns the batch's
@@ -291,16 +285,14 @@ object StreamOps {
     def shaped(df: DataFrame): DataFrame =
       if (writePartitions > 0) df.coalesce(writePartitions) else df
     // the three sub-table writes are independent reads of the fold's
-    // materialized (localCheckpoint) frames — submitted as CONCURRENT Spark
-    // jobs (the FrontierStore.commit pattern) so a micro-batch pays ~one
-    // write-job latency instead of three; per §D2 the fold is fixed-cost
-    // bound, so sequential job launches are exactly what its latency is
-    // made of. All three settle before the compaction check below.
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val writes = Seq(
+    // materialized (localCheckpoint) frames — submitted as one wave (like
+    // FrontierStore.commit) so a micro-batch pays ~one write-job latency
+    // instead of three; per §D2 the fold is fixed-cost bound, so
+    // sequential job launches are exactly what its latency is made of.
+    // The wave settles all three before the compaction check below, so a
+    // replayed batch never races a still-in-flight Overwrite on the same
+    // paths.
+    graft.Waves.seq("stream-fold")(Seq(
         // the base persists content_hash so the NEXT delta's exact-dup
         // check column-prunes to 32-byte rows instead of re-hashing text
         () => shaped(baseAppend.withColumn("content_hash", md5(col(textCol))))
@@ -309,15 +301,7 @@ object StreamOps {
             cfg.minhashHashes, cfg.minhashBands, cfg.shingleSize))
           .write.mode("overwrite").parquet(s"$idxPath/batch_id=$batchId"),
         () => shaped(survivors)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-      ).map(w => Future(w()))
-      // settle every write before surfacing a failure: a replayed batch
-      // must not race a still-in-flight Overwrite on the same paths
-      val settled = Await.result(
-        Future.sequence(writes.map(_.transform(scala.util.Success(_)))),
-        Duration.Inf)
-      settled.foreach(_.get)
-    }
+          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")))
     // bound the partition count: without folding, a 10^4-batch stream pays
     // a 10^4-dir listing + multi-path read per micro-batch
     if (compactThreshold > 0 &&

@@ -336,6 +336,49 @@ class FrontierSpec extends SparkTestBase {
     assert(metrics.count() > 0)
   }
 
+  test("failed commit: original error, no manifest, latest() kept; re-commit resumes == uninterrupted") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-commit-fail").toString
+    val pol = PolitenessConfig(defaultBudget = 7, saltBuckets = 4)
+    val full = defaultRun._2
+    assert(full.rounds > 3)
+    val store = new FrontierStore(spark, dir)
+    FrontierCrawl.run(spark, pagesDf, cfg.seeds, Some(store), RobotsRules.empty, pol, 2)
+    val prev = store.latest().get
+    assert(prev.round == 1)
+
+    // round 2 commit in which one table's write throws on its first row
+    // while the round's other tables are valid writes to the same paths
+    // the engine's own commit of round 2 uses
+    val boom = udf { (_: String) => throw new IllegalStateException("poisoned commit row"); 0 }
+    val names = Seq("frontier", "seen_delta", "extracted", "results", "scheduled", "metrics")
+    val tables = names.map(n => n -> store.read(prev, n)).toMap
+    val poisoned = tables.updated("results",
+      tables("results").withColumn("boom", boom(col("url"))))
+    val e = intercept[Exception](store.commit(2, poisoned))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => Option(c.getMessage).exists(_.contains("poisoned commit row"))),
+      s"original failure not surfaced: $e")
+    assert(!new java.io.File(s"$dir/manifests/manifest-r00002.json").exists)
+    assert(store.latest().contains(prev))
+
+    // re-commit round 2 (the engine's own, valid tables over the partial
+    // writes), then resume to completion: == the uninterrupted run
+    FrontierCrawl.run(spark, pagesDf, cfg.seeds, Some(new FrontierStore(spark, dir)),
+      RobotsRules.empty, pol, 3)
+    assert(new FrontierStore(spark, dir).latest().map(_.round).contains(2))
+    val resumed = FrontierCrawl.run(spark, pagesDf, cfg.seeds,
+      Some(new FrontierStore(spark, dir)), RobotsRules.empty, pol, 50)
+    assert(resumed.seenKeys.collect().map(_.getString(0)).toSet ==
+      full.seenKeys.collect().map(_.getString(0)).toSet)
+    val rows = (df: org.apache.spark.sql.DataFrame) => df
+      .filter(col("round") >= 3)
+      .select(col("round"), col("host"), col("slot"), col("url"))
+      .collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getString(3)))
+      .toSet
+    assert(rows(resumed.schedule) == rows(full.schedule))
+  }
+
   test("seen-part compaction: bounded manifest part list, crawl + resume unchanged") {
     val dir = java.nio.file.Files.createTempDirectory("graft-compact-store").toString
     val polPlain = PolitenessConfig(defaultBudget = 7, saltBuckets = 4)

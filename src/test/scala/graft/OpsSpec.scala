@@ -1093,6 +1093,22 @@ class OpsSpec extends SparkTestBase {
       s"no tb partition filter in:\n${planStr.take(800)}")
   }
 
+  test("bm25 index append onto an index with empty meta is rejected by path") {
+    import graft.ops.Search
+    val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0))
+    // every field empty: no dlen rows, so the index's meta has zero rows
+    val empty = Seq((1L, "", ""), (2L, " ", "")).toDF("doc_id", "question", "answer")
+    val path = java.nio.file.Files.createTempDirectory("graft-bm25-empty").toString
+    Search.bm25Index(empty, fields, path, termBuckets = 8)
+    assert(spark.read.parquet(s"$path/meta").isEmpty)
+    val delta = Seq((3L, "hash join", "spark")).toDF("doc_id", "question", "answer")
+    val e = intercept[IllegalArgumentException] {
+      Search.bm25IndexAppend(delta, fields, path, termBuckets = 8)
+    }
+    assert(e.getMessage.contains(s"$path/meta") && e.getMessage.contains("empty"),
+      e.getMessage)
+  }
+
   test("bm25 index append == full rebuild; indexed phrase probe == direct") {
     import graft.ops.Search
     val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0),
